@@ -32,24 +32,28 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 
 def submit(cores: int, cli_args: list[str]) -> dict:
     # the CLI deliberately uses the plain builder (the deployment shape);
     # a real cluster passes sizing/tuning via spark-submit --conf exactly
-    # like this (values mirror session.py — the measured engine config;
-    # the 1 GB driver default OOMs at n=800k)
+    # like this (values mirror session.py — the measured engine config,
+    # memory sized for this host; the 1 GB driver default OOMs at n=800k)
+    from jira_duplicate_detection_turkcell__spark.session import memory_sizes
+
+    heap, offheap = memory_sizes()
     cmd = [
         SPARK_SUBMIT,
         "--master", f"local[{cores}]",
-        "--driver-memory", "24g",
+        "--driver-memory", heap,
         "--conf", f"spark.sql.shuffle.partitions={cores * 4}",
         "--conf", "spark.sql.adaptive.enabled=true",
         "--conf", "spark.sql.adaptive.advisoryPartitionSizeInBytes=16MB",
         "--conf", "spark.sql.join.preferSortMergeJoin=false",
         "--conf", "spark.memory.offHeap.enabled=true",
-        "--conf", "spark.memory.offHeap.size=16g",
+        "--conf", f"spark.memory.offHeap.size={offheap}",
         "--conf", "spark.driver.extraJavaOptions=-XX:+UseParallelGC -XX:NewRatio=1",
         "--conf", f"spark.sql.files.maxPartitionBytes={32 * 1024 * 1024}",
         "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
@@ -73,6 +77,11 @@ def main():
     ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("--workdir", default="/tmp/append_bench")
     args = ap.parse_args()
+    # --py-files ships the zip of the current source tree, never a stale one
+    subprocess.run(
+        ["bash", str(REPO / "scripts" / "make_pyfiles.sh")], check=True, cwd=REPO,
+        capture_output=True,
+    )
 
     total = args.base_n + args.append_n
     work = Path(args.workdir)

@@ -115,6 +115,24 @@ def _synth_params(args) -> dict | None:
     }
 
 
+def _read_synth_meta(path: Path) -> dict:
+    """The generator params recorded in a store's ``SYNTH.json``. A file
+    that does not parse to a JSON object (edited by hand, or torn by a
+    crash on a filesystem without atomic rename) cannot vouch for the
+    corpus, so the run stops with the rebuild hint."""
+    try:
+        meta = json.loads(path.read_text())
+    except json.JSONDecodeError:
+        meta = None
+    if not isinstance(meta, dict):
+        raise SystemExit(
+            f"{path} is corrupt (not a JSON object of synth params) — the "
+            f"store's corpus provenance is unknown; use a fresh "
+            f"--checkpoint-dir and rebuild with `dedup --synth-n --synth-total`"
+        )
+    return meta
+
+
 def cmd_dedup(args) -> None:
     from pyspark.sql import SparkSession
 
@@ -152,7 +170,7 @@ def cmd_dedup(args) -> None:
         docs_reused = store.is_committed("docs")
         if synth_params is not None:
             if synth_meta.exists():
-                have = json.loads(synth_meta.read_text())
+                have = _read_synth_meta(synth_meta)
                 if have != synth_params and docs_reused:
                     raise SystemExit(
                         f"dedup --synth-n: this store's committed corpus was "
@@ -183,7 +201,11 @@ def cmd_dedup(args) -> None:
     if record_synth:
         # run_dedup returned → the docs stage this label describes is
         # committed (see the timing note above)
-        synth_meta.write_text(json.dumps(synth_params))
+        # tmp + rename, like every manifest write in the store: a crash
+        # mid-write never leaves a truncated label behind
+        tmp = synth_meta.with_suffix(".json.tmp")
+        tmp.write_text(json.dumps(synth_params))
+        tmp.rename(synth_meta)
     _report_output(
         spark, result["clusters"], args.output, t0,
         extra={"config_fingerprint": cfg.fingerprint()},
@@ -208,7 +230,6 @@ def cmd_append(args) -> None:
     """
     from pyspark.sql import SparkSession
 
-    from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
     from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
     from jira_duplicate_detection_turkcell__spark.streaming import incremental
 
@@ -217,20 +238,10 @@ def cmd_append(args) -> None:
     _validate_source_args(args)
     store = StageStore(args.state_dir, config_fingerprint=cfg.fingerprint())
 
-    state_stages = ["docs", "signatures"]
+    state_stages = ["docs", "signatures", "edges"]
     if cfg.enable_substring:
         state_stages.append("substr_postings")
-    # a fresh `dedup` store commits per-KIND edge stages; every append
-    # commits (and thereafter reads) one combined "edges" stage
-    if store.is_committed("edges"):
-        edge_stages = ["edges"]
-    else:
-        edge_stages = ["edges_minhash"]
-        if cfg.enable_simhash:
-            edge_stages.append("edges_simhash")
-        if cfg.enable_substring:
-            edge_stages.append("edges_substring")
-    for st in state_stages + edge_stages:
+    for st in state_stages:
         if not store.is_committed(st):
             raise SystemExit(
                 f"append: state stage '{st}' is missing from {args.state_dir} "
@@ -252,7 +263,7 @@ def cmd_append(args) -> None:
                 "SYNTH.json) — appending a synthetic slice onto it would "
                 "mix corpora; rebuild with `dedup --synth-n --synth-total`"
             )
-        have = json.loads(synth_meta.read_text())
+        have = _read_synth_meta(synth_meta)
         if (
             have.get("synth_seed") != want["synth_seed"]
             or have.get("synth_n_sites") != want["synth_n_sites"]
@@ -265,8 +276,7 @@ def cmd_append(args) -> None:
             )
 
     gens = {
-        st: store.manifest(st).metrics.get("generation", 0)
-        for st in state_stages + edge_stages
+        st: store.manifest(st).metrics.get("generation", 0) for st in state_stages
     }
     if len(set(gens.values())) != 1:
         raise SystemExit(
@@ -275,18 +285,10 @@ def cmd_append(args) -> None:
         )
     generation = next(iter(gens.values())) + 1
 
-    existing_edges = store.load(spark, edge_stages[0]).select("key_l", "key_r")
-    for st in edge_stages[1:]:
-        existing_edges = existing_edges.unionByName(
-            store.load(spark, st).select("key_l", "key_r")
-        )
-    if len(edge_stages) > 1:
-        existing_edges = existing_edges.distinct()
-
     t0 = time.time()
     upd = incremental.apply_append(
         store.load(spark, "signatures"),
-        existing_edges,
+        store.load(spark, "edges"),
         _pages_from_args(spark, args),
         cfg,
         existing_docs=store.load(spark, "docs"),
@@ -307,25 +309,9 @@ def cmd_append(args) -> None:
     txn.stage_segment("signatures", upd["new_signatures"], metrics=gen_metric)
     if cfg.enable_substring:
         txn.stage_segment("substr_postings", upd["new_postings"], metrics=gen_metric)
-    if store.is_committed("edges"):
-        # chained append: the combined edge stage grows by the new edges
-        # (disjoint from prior edges by construction — every one touches a
-        # new doc; the cluster step distincts defensively either way)
-        txn.stage_segment("edges", upd["new_edges"], metrics=gen_metric)
-    else:
-        # first append on a per-kind base: consolidate into ONE combined
-        # stage, superseding the per-kind stages IN THE SAME transaction —
-        # no crash window where appended docs coexist with stale per-kind
-        # edges (a later `dedup` resume would have mixed generations)
-        txn.stage_full("edges", upd["edges"], metrics=gen_metric)
-    # Supersede the per-kind edge stages on EVERY append (idempotent when
-    # absent): a `dedup --checkpoint-dir` resume between appends re-commits
-    # them over the then-current corpus, and without this a later append
-    # would leave those re-committed stages stale — a subsequent resume
-    # forced to recompute clusters would union per-kind edges missing every
-    # pair that touches this batch.
-    for st in ("edges_minhash", "edges_simhash", "edges_substring"):
-        txn.invalidate(st)
+    # the new edges are disjoint from the prior ones by construction: every
+    # one touches a new doc, and the batch is key-disjoint from the corpus
+    txn.stage_segment("edges", upd["new_edges"], metrics=gen_metric)
     txn.stage_full("clusters", upd["clusters"], metrics=gen_metric)
     txn.commit()
 

@@ -6,19 +6,18 @@ hybrid search (hybrid_search.py:291-519) is stages 2-3 turned into a global
 self-"join" instead of one query at a time, and its implicit duplicate groups
 become explicit connected components.
 
-Every stage optionally commits through ``StageStore`` (resume = skip committed
-stages with a matching config fingerprint). The edge-list interface between
-candidate paths and clustering is uniform: (key_l, key_r) with key_l < key_r.
+Both job shapes run ONE stage graph (``run_dedup``); a ``StageStore`` only
+changes what a stage boundary does — commit (resume = skip committed stages
+with a matching config fingerprint) instead of an in-memory pin. The
+edge-list interface between candidate paths and clustering is uniform:
+(key_l, key_r) with key_l < key_r.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
-import sys
-import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,45 +147,6 @@ def signature_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     # the signature table is the widest thing the pipeline materializes;
     # dropping text (available from the docs stage) halves its on-wire size
     return out.drop("text")
-
-
-def minhash_edges(
-    signed: DataFrame,
-    cfg: DedupConfig,
-    temps: list[DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    # the band table feeds three consumers inside candidate_pairs (bucket
-    # sizing, both join sides) — materialize it once instead of re-exploding.
-    # ``temps`` collects the pin so callers that materialize the edges (a
-    # stage commit) can release it instead of leaking it for the session.
-    if "band_hashes" in signed.columns:
-        # band hashes were precomputed inside the signature kernel
-        bands_df = signed.select(
-            "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
-        ).persist()
-    else:
-        bands_df = minhash.explode_bands(
-            signed, "minhash_sig", "url", cfg.bands, cfg.rows
-        ).persist()
-    if temps is not None:
-        temps.append(bands_df)
-    pairs, hot = minhash.candidate_pairs(bands_df, "url", cfg.minhash_bucket_cap)
-    edges = verify.jaccard_edges(
-        pairs,
-        signed,
-        cfg.jaccard_threshold,
-        "url",
-        "shingles",
-        sig_col="minhash_sig",
-    )
-    return edges, hot
-
-
-def simhash_edges(signed: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
-    chunks = simhash.explode_chunks(signed, "simhash", "url")
-    pairs, hot = simhash.simhash_candidate_pairs(chunks, "url", cfg.simhash_bucket_cap)
-    edges = verify.hamming_edges(pairs, signed, cfg.hamming_max, "url", "simhash")
-    return edges, hot
 
 
 def fused_edges(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -387,162 +347,116 @@ def run_dedup(
     cfg: DedupConfig | None = None,
     store: StageStore | None = None,
 ) -> dict[str, DataFrame]:
-    """Full pipeline. Returns {'docs', 'edges', 'clusters'} DataFrames.
+    """Full pipeline. Returns {'docs', 'signatures', 'edges', 'clusters'}.
 
-    With a ``store``, each stage is committed and a resumed run reuses every
-    stage whose manifest matches the current config fingerprint.
+    One stage graph for both job shapes: extract → sign → fused edges
+    (∪ substring, ∪ exact-collapse star edges) → connected components. With
+    a ``store``, each stage is committed and read back, and a resumed run
+    reuses every stage whose manifest matches the current config
+    fingerprint; the committed layout ({docs, signatures, edges, clusters}
+    + substr_postings) is the one ``cli.py append`` grows by segments.
     """
     cfg = cfg or DedupConfig()
     assert cfg.bands * cfg.rows == cfg.num_perm, "bands*rows must equal num_perm"
     if store is not None:
         store.config_fingerprint = cfg.fingerprint()
+    counts: dict[str, int] = {}
 
-    verbose = bool(os.environ.get("SPARK_GRAFT_TIMING"))
-    stage_counts: dict[str, int] = {}
+    def stage(name: str, build, pin: bool = True, durable: bool = True) -> DataFrame:
+        """One stage boundary; records the stage's row count in ``counts``
+        whenever it is known without an extra job.
 
-    def clocked(name: str, fn):
-        t0 = time.time()
-        out = fn()
-        if verbose:
-            print(f"[pipeline] {name}: {time.time() - t0:.2f}s", file=sys.stderr, flush=True)
-        return out
-
-    def stage(name: str, build, metrics: dict | None = None) -> DataFrame:
-        if store is None:
-            # materialize each stage boundary so downstream consumers (several
-            # per stage, plus the CC iteration loop) don't re-execute the
-            # expensive extraction/signature UDFs once per action. persist()
-            # keeps the columnar cache format — profiling showed localCheckpoint
-            # row-serialization dominated the whole pipeline on wide stages.
-            df = build().persist()
-            stage_counts[name] = clocked(name, df.count)
-            return df
-        if store.is_committed(name):
+        With a store, a durable stage is committed (unless a matching
+        commit exists) and loaded back; its row count is the manifest's.
+        Otherwise a pinned stage is persisted and counted so its several
+        consumers (and the CC loop) don't re-execute the extraction /
+        signature UDFs once per action — persist() keeps the columnar cache
+        format (localCheckpoint row-serialization dominated the pipeline on
+        wide stages). An unpinned stage stays a lazy plan: every Spark
+        action carries fixed scheduler/AQE latency, and at 10^5-10^6 docs
+        the job count, not compute, set the wall-clock floor (measured: 120
+        jobs ≈ 2 min serial floor).
+        """
+        if store is not None and durable:
+            if not store.is_committed(name):
+                store.commit(name, build())
+            counts[name] = store.manifest(name).row_count
             return store.load(spark, name)
         df = build()
-        store.commit(name, df, metrics)
-        return store.load(spark, name)
+        if pin:
+            df = df.persist()
+            counts[name] = df.count()
+        return df
 
-    # internal persists (band tables, substring grouping graphs) pinned by
-    # the edge builders — released once the consuming stage is materialized
-    # so repeated run_dedup calls in one session don't accumulate dead
-    # cached blocks that evict useful cache
-    temps: list[DataFrame] = []
-
-    def release_temps() -> None:
-        while temps:
-            temps.pop().unpersist()
-
-    if store is not None:
-        # checkpointed mode: every stage is a durable commit (resumable).
-        # The exact-collapse membership is DERIVED (deterministic from the
-        # committed docs stage, cheap to recompute) rather than committed,
-        # so the stage layout is unchanged from the resume contract.
-        docs = stage("docs", lambda: extract_stage(pages))
-        if cfg.exact_collapse:
-            membership = exact_collapse(docs)
-            sign_input = rep_docs(membership)
-        else:
-            membership = None
-            sign_input = docs
-        signed = stage("signatures", lambda: signature_stage(sign_input, cfg))
-
-        edge_parts: list[DataFrame] = [
-            stage(
-                "edges_minhash",
-                lambda: minhash_edges(signed, cfg, temps=temps)[0].select(
-                    "key_l", "key_r"
-                ),
-            )
-        ]
-        release_temps()  # stage committed → the band-table pin is dead
-        if cfg.enable_simhash:
-            edge_parts.append(
-                stage(
-                    "edges_simhash",
-                    lambda: simhash_edges(signed, cfg)[0].select("key_l", "key_r"),
-                )
-            )
-        if cfg.enable_substring:
-            # the postings table is the substring path's incremental-append
-            # state (streaming/incremental.apply_append) — commit it as its
-            # own stage so an append run loads it instead of re-winnowing
-            # the corpus
-            postings = stage(
-                "substr_postings",
-                lambda: suffix.substring_postings(
-                    sign_input, "text", "url", cfg.substr_min_len, cfg.substr_sample
-                ),
-            )
-            edge_parts.append(
-                stage(
-                    "edges_substring",
-                    lambda: substring_edges(
-                        sign_input, cfg, postings=postings, temps=temps
-                    ).select("key_l", "key_r"),
-                )
-            )
-            release_temps()  # stage committed → grouping-graph pins are dead
-        edges = edge_parts[0]
-        for e in edge_parts[1:]:
-            edges = edges.union(e)
-        edges = edges.distinct()
-        if membership is not None:
-            edges = edges.union(exact_star_edges(membership))
-        clusters = stage(
-            "clusters",
-            lambda: connected_components(edges, docs, "url", edges_unique=True),
-        )
-        return {"docs": docs, "signatures": signed, "edges": edges, "clusters": clusters}
-
-    # in-memory mode: minimize materialization barriers — each Spark action
-    # carries fixed scheduler/AQE latency, and at 10^5-10^6 docs the job count,
-    # not compute, set the wall-clock floor (measured: 120 jobs ≈ 2 min serial
-    # floor). Only two wide tables are pinned: signatures and the edge list.
-    # Candidate generation + verification run as ONE fused plan (fused_edges)
-    # instead of two independent per-path subtrees; the returned edge list is
-    # distinct in both modes (same edge-table semantics as checkpointed mode).
-    docs = extract_stage(pages)
+    # the substring path re-reads docs' text, so pin docs for it — unless
+    # exact collapse pins the (url, _rep, text) membership instead
+    docs = stage(
+        "docs",
+        lambda: extract_stage(pages),
+        pin=cfg.enable_substring and not cfg.exact_collapse,
+    )
     if cfg.exact_collapse:
-        # exact-dup collapse: sign/pair/verify representatives only; members
-        # rejoin as star edges before clustering (see exact_collapse)
-        membership = stage(
-            "exact_collapse", lambda: exact_collapse(docs).select("url", "_rep", "text")
-        )
+        # sign/pair/verify representatives only; members rejoin as star
+        # edges before clustering (see exact_collapse). The membership is
+        # derived from docs and cheap to recompute, so it is never committed
+        membership = stage("exact_collapse", lambda: exact_collapse(docs), durable=False)
         sign_input = rep_docs(membership)
-        nodes = membership.select("url")
     else:
         membership = None
         sign_input = docs
-        if cfg.enable_substring:
-            docs = sign_input = docs.persist()  # substring path re-reads text
     signed = stage("signatures", lambda: signature_stage(sign_input, cfg))
-    if membership is None:
-        nodes = signed.select("url")
+    nodes = (signed if membership is None else membership).select("url")
 
-    edges_plan = fused_edges(signed, cfg)
+    postings = None
     if cfg.enable_substring:
-        edges_plan = edges_plan.union(
-            substring_edges(sign_input, cfg, temps=temps).select("key_l", "key_r")
-        ).distinct()
-    if membership is not None:
-        # rep→member star edges are disjoint from rep↔rep near-dup edges, so
-        # the union stays distinct with key_l < key_r
-        edges_plan = edges_plan.union(exact_star_edges(membership))
-    edges = stage("edges", lambda: edges_plan)
-    release_temps()  # edge stage persisted+counted → grouping pins are dead
+        # the substring path's incremental-append state (streaming/
+        # incremental.apply_append): committed with a store so an append
+        # loads it instead of re-winnowing the corpus; lazy in memory
+        postings = stage(
+            "substr_postings",
+            lambda: suffix.substring_postings(
+                sign_input, "text", "url", cfg.substr_min_len, cfg.substr_sample
+            ),
+            pin=False,
+        )
 
-    clusters = clocked(
-        "connected_components",
+    # internal persists (substring grouping graphs) pinned by the edge
+    # builders — released once the edge stage is materialized so repeated
+    # run_dedup calls in one session don't accumulate dead cached blocks
+    temps: list[DataFrame] = []
+
+    def edge_plan() -> DataFrame:
+        # candidate generation + verification run as ONE fused plan
+        # (fused_edges); the edge list is distinct with key_l < key_r
+        edges = fused_edges(signed, cfg)
+        if postings is not None:
+            edges = edges.union(
+                substring_edges(sign_input, cfg, postings=postings, temps=temps)
+                .select("key_l", "key_r")
+            ).distinct()
+        if membership is not None:
+            # rep→member star edges are disjoint from rep↔rep near-dup
+            # edges, so the union stays distinct with key_l < key_r
+            edges = edges.union(exact_star_edges(membership))
+        return edges
+
+    edges = stage("edges", edge_plan)
+    while temps:
+        temps.pop().unpersist()
+
+    clusters = stage(
+        "clusters",
         lambda: connected_components(
             edges,
             nodes,
             "url",
             nodes_unique=True,
-            # the edge stage above persisted + counted the distinct l<r list —
-            # hand the count over so the hybrid gate runs zero extra jobs
+            # the edge stage is the distinct l<r list, and its count is
+            # known (stage count or manifest) — the hybrid gate runs zero
+            # extra jobs
             edges_unique=True,
-            edge_count=stage_counts["edges"],
+            edge_count=counts["edges"],
         ),
+        pin=False,
     )
     return {"docs": docs, "signatures": signed, "edges": edges, "clusters": clusters}

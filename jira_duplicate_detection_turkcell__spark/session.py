@@ -67,11 +67,10 @@ _BASE_CONF: dict[str, str] = {
     # steal) vs 2-6 s with off-heap, and total task-time stabilized at
     # ~465 s where on-heap swung 457-720 s. local[2] is unaffected (GC was
     # already ~5 s), so this is pure high-parallelism headroom — the
-    # standard production posture for shuffle-heavy stages. 16 GB is the
-    # sandbox ceiling share (24 g heap + 16 g off-heap ≪ 128 GiB); a real
-    # cluster sizes it per executor via --conf.
+    # standard production posture for shuffle-heavy stages. The size is
+    # host-derived (memory_sizes); a real cluster sizes it per executor via
+    # --conf.
     "spark.memory.offHeap.enabled": "true",
-    "spark.memory.offHeap.size": "16g",
     # Shuffled-hash over sort-merge for equi-joins. The dominant stage of
     # the fused pair join is the bucket-table self-join; its SMJ sorts
     # (3-part key × 34M rows/side at n=800k) were the single biggest CPU
@@ -115,6 +114,40 @@ _MALLOC_ENV: dict[str, str] = {
 }
 
 
+# caps on the host-derived sizes: the values measured on a 128 GiB host,
+# where 24 g heap + 16 g off-heap left ample room for the Python workers
+_MAX_HEAP_MB = 24 * 1024
+_MAX_OFFHEAP_MB = 16 * 1024
+
+
+def host_mem_total_mb() -> int | None:
+    """``MemTotal`` of /proc/meminfo in MiB, or None where it is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def memory_sizes(mem_total_mb: int | None = None) -> tuple[str, str]:
+    """(driver heap, off-heap) sizes for this host: 3/8 and 1/8 of
+    ``MemTotal``, capped at 24 g and 16 g. Together they take at most half
+    the host, leaving the rest to the Python UDF workers (forked per task
+    slot in local mode) and the OS page cache; on a 15 GiB host that is a
+    ~6 g heap — a fixed 24 g + 16 g request there got the JVM OOM-killed.
+    Without a readable ``MemTotal`` the caps apply."""
+    if mem_total_mb is None:
+        mem_total_mb = host_mem_total_mb()
+    if mem_total_mb is None:
+        return f"{_MAX_HEAP_MB}m", f"{_MAX_OFFHEAP_MB}m"
+    heap = min(_MAX_HEAP_MB, mem_total_mb * 3 // 8)
+    offheap = min(_MAX_OFFHEAP_MB, mem_total_mb // 8)
+    return f"{heap}m", f"{offheap}m"
+
+
 def get_spark(
     app_name: str = "spark-webtext-dedup",
     cores: int | None = None,
@@ -126,6 +159,8 @@ def get_spark(
     `cores=None` uses ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``);
     an explicit `cores` pins ``local[cores]`` — the bench harness uses this
     to evidence N→4N scaling (local[8] vs local[32]) per BASELINE.md.
+    Driver heap and off-heap sizes come from ``memory_sizes``; an explicit
+    ``SPARK_DRIVER_MEMORY`` or ``extra_conf`` entry wins.
     """
     if cores is None:
         env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -159,12 +194,14 @@ def get_spark(
             f"{repo_root}{os.pathsep}{pythonpath}" if pythonpath else repo_root
         )
 
+    heap, offheap = memory_sizes()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(default_parallelism))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", heap))
+        .config("spark.memory.offHeap.size", offheap)
     )
     for k, v in _MALLOC_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
@@ -174,9 +211,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def stop_spark() -> None:
-    """Stop the active session (used between bench parallelism levels)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

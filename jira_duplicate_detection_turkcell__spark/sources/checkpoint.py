@@ -191,17 +191,14 @@ class StageStore:
         1. flip: rename each MANIFEST.json.staged over MANIFEST.json
            (atomic per stage; a missing staged file means that stage
            already flipped),
-        2. invalidate: unlink manifests of superseded stages,
-        3. gc: delete data directories no longer referenced by any live
+        2. gc: delete data directories no longer referenced by any live
            manifest (old full-rewrite segments),
-        4. remove the intent file — the transaction's own commit point.
+        3. remove the intent file — the transaction's own commit point.
         """
         for stage in intent.get("flip", []):
             staged = self._staged_manifest_path(stage)
             if staged.exists():
                 staged.rename(self._manifest_path(stage))
-        for stage in intent.get("invalidate", []):
-            self.invalidate(stage)
         for stage, dirs in intent.get("gc", {}).items():
             for d in dirs:
                 shutil.rmtree(self._segment_dir(stage, d), ignore_errors=True)
@@ -218,7 +215,7 @@ class StageTxn:
     read from), new manifests to ``MANIFEST.json.staged``. Nothing a reader
     can see changes until ``commit()``, which writes one intent file
     (``TXN.json``, tmp+rename) and then applies it: per-stage manifest
-    renames, invalidations, and GC of superseded data dirs. Crash windows:
+    renames and GC of superseded data dirs. Crash windows:
 
     * before ``commit()`` — the live generation is untouched and fully
       usable; staged leftovers are inert (readers only follow
@@ -240,7 +237,6 @@ class StageTxn:
         self.store = store
         self.generation = generation
         self._flip: list[str] = []
-        self._invalidate: list[str] = []
         self._gc: dict[str, list[str]] = {}
 
     def _segment_name(self) -> str:
@@ -293,13 +289,23 @@ class StageTxn:
     def stage_segment(self, stage: str, df: DataFrame, metrics: dict | None = None) -> None:
         """Append ``df`` as a new segment of ``stage`` (staged until commit)
         — writes ONLY the new rows; the committed stage becomes the union
-        of its segments."""
+        of its segments. A segment whose schema differs from the stage's
+        is refused before anything is written: ``load()`` reads the
+        segments as one parquet dataset without schema merging, so a
+        drifted segment would commit a table that misreads later."""
         if not self.store._manifest_path(stage).exists():
             raise ValueError(
                 f"stage_segment('{stage}'): no committed base manifest to "
                 f"append to — use stage_full for the first write"
             )
         prior = self.store.manifest(stage)
+        ddl = df.schema.simpleString()
+        if ddl != prior.schema_ddl:
+            raise ValueError(
+                f"stage_segment('{stage}'): segment schema {ddl} differs from "
+                f"the committed stage's {prior.schema_ddl} — rebuild the "
+                f"store instead of appending"
+            )
         seg = self._segment_name()
         seg_dir = self._write_segment(stage, df)
         row_count, file_count, partition_rows, schema_ddl = self.store._lineage(
@@ -315,25 +321,11 @@ class StageTxn:
             # lives in the superseded manifests' history; totals are exact)
             partition_rows=partition_rows,
             metrics=metrics or {},
-            schema_ddl=schema_ddl or prior.schema_ddl,
+            schema_ddl=schema_ddl,
             file_count=total_files,
             partition_rows_truncated=total_files > len(partition_rows),
             segments=segments,
         ))
-
-    def invalidate(self, stage: str) -> None:
-        """Mark ``stage`` superseded — its manifest is unlinked atomically
-        with the flip (ADVICE r4: per-kind edge stages must not outlive the
-        combined stage by a crash window), and its data segments are GC'd
-        with the same transaction: an unlinked manifest with full data dirs
-        left behind would orphan the superseded table in the store forever
-        (appends never rebuild it). Idempotent — invalidating an absent or
-        already-invalidated stage is a no-op."""
-        self._invalidate.append(stage)
-        if self.store._manifest_path(stage).exists():
-            segs = self.store.manifest(stage).segments or ["data"]
-            gc = self._gc.setdefault(stage, [])
-            gc.extend(s for s in segs if s not in gc)
 
     def commit(self) -> None:
         """Write the intent file, then apply it. The tmp+rename of TXN.json
@@ -342,7 +334,6 @@ class StageTxn:
         intent = {
             "generation": self.generation,
             "flip": self._flip,
-            "invalidate": self._invalidate,
             "gc": self._gc,
         }
         txn = self.store._txn_path()

@@ -142,9 +142,9 @@ def apply_append(
 ) -> dict[str, DataFrame]:
     """One append step → updated {'signatures', 'edges', 'clusters'}
     (+ 'docs' whenever ``existing_docs`` is given, + 'postings' under the
-    substring kind — thread them into the next append; ``'signed'`` is a
-    deprecated alias of ``'signatures'`` so batch and append state dicts
-    thread interchangeably). Alongside each updated table the NEW-batch
+    substring kind — thread them into the next append; the keys match
+    ``run_dedup``'s, so batch and append state dicts thread
+    interchangeably). Alongside each updated table the NEW-batch
     delta is returned under ``new_docs`` / ``new_signatures`` /
     ``new_edges`` / ``new_postings`` — a segment-append checkpoint commits
     only those (O(new batch) I/O; the committed segments union back to the
@@ -254,7 +254,6 @@ def apply_append(
     clusters = connected_components(edges, signed.select("url"), "url")
     out = {
         "signatures": signed,
-        "signed": signed,  # deprecated alias (pre-round-5 key)
         "edges": edges,
         "clusters": clusters,
         "new_docs": new_docs,

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 from jira_duplicate_detection_turkcell__spark import synth
@@ -20,12 +22,22 @@ def _assignments(result):
     return {r["url"]: r["cluster_id"] for r in result["clusters"].collect()}
 
 
+def _edges(result):
+    return {(r["key_l"], r["key_r"]) for r in result["edges"].collect()}
+
+
+def committed_stages(root) -> set[str]:
+    """Stage names with a live manifest under a store root."""
+    return {p.parent.name for p in root.glob("*/MANIFEST.json")}
+
+
 def test_full_run_commits_all_stages(spark, pages, tmp_path_factory):
     root = tmp_path_factory.mktemp("ckpt_full")
     store = StageStore(root)
     result = P.run_dedup(spark, pages, CFG, store)
     baseline = _assignments(result)
-    for stage in ["docs", "signatures", "edges_minhash", "edges_simhash", "clusters"]:
+    assert committed_stages(root) == {"docs", "signatures", "edges", "clusters"}
+    for stage in committed_stages(root):
         assert store.is_committed(stage), stage
         m = store.manifest(stage)
         assert m.row_count == sum(m.partition_rows.values())
@@ -41,7 +53,7 @@ def test_kill_after_stage_then_resume(spark, pages, tmp_path_factory):
     baseline = _assignments(P.run_dedup(spark, pages, CFG, store))
 
     # simulate a crash mid-pipeline: later stages' commits are lost
-    store.invalidate("edges_simhash")
+    store.invalidate("edges")
     store.invalidate("clusters")
     resumed = P.run_dedup(spark, pages, CFG, StageStore(root))
     assert _assignments(resumed) == baseline
@@ -113,7 +125,9 @@ def test_append_from_committed_postings_state(spark, pages, tmp_path_factory):
     root = tmp_path_factory.mktemp("ckpt_append")
     store = StageStore(root)
     base = P.run_dedup(spark, spark.createDataFrame(pdf[~batch2]), cfg, store)
-    assert store.is_committed("substr_postings")
+    assert committed_stages(root) == {
+        "docs", "signatures", "substr_postings", "edges", "clusters"
+    }
 
     upd = incremental.apply_append(
         base["signatures"],
@@ -125,6 +139,30 @@ def test_append_from_committed_postings_state(spark, pages, tmp_path_factory):
     )
     full = P.run_dedup(spark, spark.createDataFrame(pdf), cfg)
     assert _assignments(upd) == _assignments(full)
-    inc_edges = {(r["key_l"], r["key_r"]) for r in upd["edges"].collect()}
-    full_edges = {(r["key_l"], r["key_r"]) for r in full["edges"].collect()}
-    assert inc_edges == full_edges
+    assert _edges(upd) == _edges(full)
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        CFG,
+        dataclasses.replace(CFG, enable_simhash=False),
+        dataclasses.replace(CFG, enable_substring=True),
+        dataclasses.replace(CFG, exact_collapse=True),
+    ],
+    ids=["simhash_on", "simhash_off", "substring", "exact_collapse"],
+)
+def test_checkpointed_equals_in_memory(spark, pages, tmp_path, cfg):
+    """One stage graph for both job shapes: the store only changes what a
+    stage boundary does, so the committed run's edge list and clusters
+    equal the in-memory run's, and it commits one fused ``edges`` stage."""
+    in_memory = P.run_dedup(spark, pages, cfg)
+    store = StageStore(tmp_path / "ckpt")
+    checkpointed = P.run_dedup(spark, pages, cfg, store)
+    assert _edges(checkpointed) == _edges(in_memory)
+    assert _assignments(checkpointed) == _assignments(in_memory)
+    want = {"docs", "signatures", "edges", "clusters"}
+    if cfg.enable_substring:
+        want.add("substr_postings")
+    assert committed_stages(tmp_path / "ckpt") == want
+    assert store.manifest("edges").row_count == len(_edges(in_memory))

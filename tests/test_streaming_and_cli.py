@@ -402,9 +402,12 @@ def test_cli_append_in_process(spark, tmp_path):
     }
     assert inc == full
     store = StageStore(ckpt)
+    # one fused edge stage, grown by the append's segment
+    assert {p.parent.name for p in ckpt.glob("*/MANIFEST.json")} == {
+        "docs", "signatures", "substr_postings", "edges", "clusters"
+    }
     assert store.manifest("edges").metrics["generation"] == 1
-    # per-kind edge stages invalidated → a later dedup resume can't mix
-    assert not (ckpt / "edges_minhash" / "MANIFEST.json").exists()
+    assert store.manifest("edges").segments == ["data", "data-g1"]
     # committed edge state stores each pair once — a pair witnessed by both
     # a signature kind and the substring kind must not commit twice
     edges = store.load(spark, "edges")

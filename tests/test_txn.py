@@ -66,6 +66,23 @@ def test_stage_full_gcs_old_segments_only_after_flip(spark, tmp_path):
     assert not (tmp_path / "st" / "t" / "data-g1").exists()
 
 
+def test_stage_segment_refuses_schema_drift(spark, tmp_path):
+    """A segment whose columns differ from the committed stage's is refused
+    at staging time — the segments are read back as one parquet dataset
+    without schema merging, so a drifted segment must never commit."""
+    store = StageStore(tmp_path / "st")
+    store.commit("t", _range_df(spark, 0, 10))
+    txn = store.begin_txn(1)
+    with pytest.raises(ValueError, match="schema"):
+        txn.stage_segment("t", spark.range(10, 20).selectExpr("id", "'x' AS v"))
+    with pytest.raises(ValueError, match="schema"):
+        txn.stage_segment("t", spark.range(10, 20))
+    assert not (tmp_path / "st" / "t" / "data-g1").exists()
+    txn.stage_segment("t", _range_df(spark, 10, 20))  # matching schema
+    txn.commit()
+    assert store.load(spark, "t").count() == 20
+
+
 def test_crash_before_intent_leaves_base_generation_usable(spark, tmp_path):
     """Staged-but-uncommitted writes are invisible: readers follow only
     MANIFEST.json, and a retry txn overwrites the leftovers."""
@@ -94,25 +111,17 @@ def test_crash_before_intent_leaves_base_generation_usable(spark, tmp_path):
 
 def test_crash_after_intent_rolls_forward_on_open(spark, tmp_path):
     """Once TXN.json is durable the new generation is guaranteed: a store
-    opened after a mid-flip crash completes the flip, the invalidations,
-    and the GC."""
+    opened after a mid-flip crash completes the flip and the GC."""
     store = StageStore(tmp_path / "st")
     store.commit("a", _range_df(spark, 0, 50))
     store.commit("b", _range_df(spark, 0, 7))
-    store.commit("stale", _range_df(spark, 0, 3))
 
     txn = store.begin_txn(1)
     txn.stage_segment("a", _range_df(spark, 50, 60), metrics={"generation": 1})
     txn.stage_full("b", _range_df(spark, 0, 9), metrics={"generation": 1})
-    txn.invalidate("stale")
     # simulate a crash immediately after the intent-file rename: write the
     # exact intent commit() would, but never apply it
-    intent = {
-        "generation": 1,
-        "flip": txn._flip,
-        "invalidate": txn._invalidate,
-        "gc": txn._gc,
-    }
+    intent = {"generation": 1, "flip": txn._flip, "gc": txn._gc}
     store._txn_path().write_text(json.dumps(intent))
 
     fresh = StageStore(tmp_path / "st")  # __init__ rolls the txn forward
@@ -120,18 +129,14 @@ def test_crash_after_intent_rolls_forward_on_open(spark, tmp_path):
     assert fresh.load(spark, "b").count() == 9
     assert fresh.manifest("a").metrics == {"generation": 1}
     assert fresh.manifest("b").segments == ["data-g1"]
-    assert not fresh.is_committed("stale")
     assert not (tmp_path / "st" / "b" / "data").exists()  # gc ran
-    # invalidation GC's the superseded stage's data too — an unlinked
-    # manifest with live data dirs would orphan the table forever
-    assert not (tmp_path / "st" / "stale" / "data").exists()
     assert not fresh._txn_path().exists()
 
     # partial-flip variant: one manifest already flipped before the crash
     txn2 = fresh.begin_txn(2)
     txn2.stage_segment("a", _range_df(spark, 60, 61))
     txn2.stage_full("b", _range_df(spark, 0, 4))
-    intent2 = {"generation": 2, "flip": txn2._flip, "invalidate": [], "gc": txn2._gc}
+    intent2 = {"generation": 2, "flip": txn2._flip, "gc": txn2._gc}
     fresh._txn_path().write_text(json.dumps(intent2))
     # flip "a" by hand; crash before "b"
     fresh._staged_manifest_path("a").rename(fresh._manifest_path("a"))
@@ -191,7 +196,7 @@ def test_cli_append_crash_mid_staging_then_resume(spark, tmp_path, monkeypatch):
 
     # base generation fully usable: same stages, same generation, clusters load
     store = StageStore(ckpt)
-    for st in ("docs", "signatures", "edges_minhash", "edges_simhash", "clusters"):
+    for st in ("docs", "signatures", "edges", "clusters"):
         assert store.manifest(st).metrics.get("generation", 0) == 0, st
     assert {
         r["url"]: r["cluster_id"]
@@ -242,6 +247,15 @@ def test_cli_append_refuses_synth_param_mismatch(tmp_path):
              "--synth-total", "96",
              "--output", str(tmp_path / "c2"), "--state-dir", str(ckpt)]
         )
+    # an unparseable label (a torn or hand-edited file) → the rebuild hint,
+    # not a raw JSONDecodeError
+    (ckpt / "SYNTH.json").write_text('{"synth_seed": 4')
+    with pytest.raises(SystemExit, match="fresh --checkpoint-dir"):
+        cli.main(
+            ["append", "--synth-n", "32", "--synth-start", "64",
+             "--synth-total", "96",
+             "--output", str(tmp_path / "c2"), "--state-dir", str(ckpt)]
+        )
     # and a base with NO recorded params (pre-round-5 store / --input base)
     (ckpt / "SYNTH.json").unlink()
     with pytest.raises(SystemExit, match="recorded no synth params"):
@@ -279,13 +293,53 @@ def test_cli_dedup_refuses_resumed_synth_relabel(tmp_path):
     )
 
 
-def test_chained_append_supersedes_recommitted_per_kind_edges(spark, tmp_path):
-    """A `dedup` resume between appends re-commits the per-kind edge stages
-    over the then-current corpus; the NEXT append must supersede them in
-    its transaction (manifest unlinked, data GC'd), or a later clusters
-    recompute would union per-kind edges missing that batch's pairs."""
+def test_cli_dedup_synth_label_write_is_atomic(tmp_path, monkeypatch):
+    """SYNTH.json goes through tmp + rename: a crash mid-write leaves no
+    truncated label (which a later run could not parse), only an unlabeled
+    store — the state `append` already refuses with a rebuild hint."""
+    from pathlib import Path
+
     from jira_duplicate_detection_turkcell__spark import cli
-    from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
+
+    real_write_text = Path.write_text
+
+    def torn_write(self, data, *args, **kwargs):
+        if self.name.startswith("SYNTH.json"):
+            real_write_text(self, data[: len(data) // 2], *args, **kwargs)
+            raise OSError("injected crash mid-write")
+        return real_write_text(self, data, *args, **kwargs)
+
+    ckpt = tmp_path / "state"
+    monkeypatch.setattr(Path, "write_text", torn_write)
+    with pytest.raises(OSError, match="injected crash"):
+        cli.main(
+            ["dedup", "--synth-n", "16", "--output", str(tmp_path / "c1"),
+             "--checkpoint-dir", str(ckpt)]
+        )
+    assert not (ckpt / "SYNTH.json").exists()
+
+
+def test_cli_refuses_corrupt_synth_label(tmp_path):
+    """An unparseable SYNTH.json stops `dedup` with the fresh-store hint
+    instead of a raw JSONDecodeError."""
+    from jira_duplicate_detection_turkcell__spark import cli
+
+    ckpt = tmp_path / "state"
+    ckpt.mkdir()
+    (ckpt / "SYNTH.json").write_text('{"synth_seed": 4')
+    with pytest.raises(SystemExit, match="fresh --checkpoint-dir"):
+        cli.main(
+            ["dedup", "--synth-n", "16", "--output", str(tmp_path / "c1"),
+             "--checkpoint-dir", str(ckpt)]
+        )
+
+
+def test_chained_append_with_dedup_resume_between_equals_rebuild(spark, tmp_path):
+    """A `dedup` resume between appends reuses the appended state (one
+    ``edges`` stage, grown by a segment per append); the next append chains
+    on it, and a forced clusters recompute over the committed edges equals
+    one full rebuild."""
+    from jira_duplicate_detection_turkcell__spark import cli
 
     ckpt = tmp_path / "state"
     cli.main(
@@ -296,26 +350,25 @@ def test_chained_append_supersedes_recommitted_per_kind_edges(spark, tmp_path):
         ["append", "--synth-n", "24", "--synth-start", "48", "--synth-total", "96",
          "--output", str(tmp_path / "c2"), "--state-dir", str(ckpt)]
     )
-    # dedup resume between appends: re-commits edges_minhash/edges_simhash
-    # over the 72-doc corpus (docs/signatures/clusters stages are reused)
+    # dedup resume between appends: every stage of the 72-doc corpus is
+    # reused, nothing is re-committed
     cli.main(
         ["dedup", "--synth-n", "72", "--synth-total", "96",
          "--output", str(tmp_path / "c3"), "--checkpoint-dir", str(ckpt)]
     )
-    assert (ckpt / "edges_minhash" / "MANIFEST.json").exists()
-
     cli.main(
         ["append", "--synth-n", "24", "--synth-start", "72", "--synth-total", "96",
          "--output", str(tmp_path / "c4"), "--state-dir", str(ckpt)]
     )
-    # the chained append superseded the re-committed per-kind stages
-    for st in ("edges_minhash", "edges_simhash"):
-        assert not (ckpt / st / "MANIFEST.json").exists(), st
-        assert not (ckpt / st / "data").exists(), st  # GC'd with the txn
-
-    # and the store stays rebuild-equivalent even through a forced clusters
-    # recompute (the code path that would have read the stale stages)
     store = StageStore(ckpt)
+    assert {p.parent.name for p in ckpt.glob("*/MANIFEST.json")} == {
+        "docs", "signatures", "edges", "clusters"
+    }
+    assert store.manifest("edges").segments == ["data", "data-g1", "data-g2"]
+    assert store.manifest("edges").row_count == store.load(spark, "edges").count()
+
+    # the store stays rebuild-equivalent through a forced clusters
+    # recompute over the committed edge segments
     store.invalidate("clusters")
     cli.main(
         ["dedup", "--synth-n", "96", "--synth-total", "96",
